@@ -2,8 +2,10 @@
 
 Local testing runs a single JVM (``local[N]``); the configs below are the
 ones that also matter on a real cluster: AQE (runtime re-planning, skew-join
-splitting, shuffle coalescing), Arrow at the Python boundary, and a shuffle
-partition count sized to the parallelism rather than the 200 default.
+splitting, shuffle coalescing), Arrow at the Python boundary, a shuffle
+partition count sized to the parallelism rather than the 200 default, and
+cheap streaming checkpoint I/O (rename-based checkpoint files, RocksDB
+changelog commits).
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ def build_session(
     # ~2× cores keeps every core busy through stragglers without tiny-task
     # overhead at test scale; AQE coalesces further at runtime. On a real
     # cluster this would be sized to data volume instead (see README).
+    # Streaming queries get no AQE coalescing, so streaming/streams.py
+    # scopes their state partitions to one per core instead.
     shuffle_partitions = shuffle_partitions or max(2 * cpus, 8)
     builder = SparkSession.builder
     # Scale-adaptive input-split knob (r17, r16 verdict task #2): at the
@@ -58,6 +62,23 @@ def build_session(
         # corpus — schemas.load sniffs the footer and reads natively there.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Streaming checkpoint I/O (see streaming/streams.py): the default
+        # FileContext-based manager calls getFileLinkStatus on every atomic
+        # rename, which Hadoop's local FS answers by forking `readlink`
+        # when native libhadoop is absent. The FileSystem-based manager
+        # writes a temp file and renames it, a plain rename(2) on the
+        # local scratch FS where every checkpoint here lives.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
+        # A RocksDB state commit writes one changelog file instead of
+        # flushing, checkpointing and uploading SSTs plus a zip.
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+            "true",
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -209,6 +209,7 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file source needs a directory, so the parquet is staged into
     scratch first."""
     from ..schemas import EVENTS_READ_SCHEMA, SCHEMAS, _sniff_events_ts_kind
+    from ..streaming.streams import _run_to_memory
 
     kind = _sniff_events_ts_kind(f"{sf_dir}/events.parquet")
     schema = SCHEMAS["events"] if kind == "us" else EVENTS_READ_SCHEMA
@@ -222,14 +223,7 @@ def stream_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("stream_file_source_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_to_memory(stream, "stream_file_source_sink", "complete")
     return spark.sql("SELECT event_type, cnt FROM stream_file_source_sink")
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from highspeedrailwaybigdatasystem_spark.schemas import (
@@ -601,3 +602,119 @@ def test_cdc_upsert_survives_midstream_kill(spark):
             f"key {k}: applied {applied[k]} != 3x{n_one} — batch 0 was "
             "re-delivered or a replayed batch was lost"
         )
+
+
+_PARTITIONS = "spark.sql.shuffle.partitions"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+def test_stream_checkpoint_rule(spark):
+    """One stream_dedup call writes its checkpoint under the package's
+    checkpoint I/O rule: the query ran with one state store per core (pinned
+    in the offset log's metadata), RocksDB committed changelog files, the
+    session carries the rename-based checkpoint manager and changelog
+    checkpointing, and the scoped state-partition and provider overrides
+    are gone from the session afterwards."""
+    import json
+
+    import __spark_entry__ as entrymod
+
+    cores = str(spark.sparkContext.defaultParallelism)
+    before = {k: spark.conf.get(k) for k in (_PARTITIONS, _PROVIDER)}
+    assert before[_PARTITIONS] != cores  # else the override is unobservable
+
+    entrymod.queries()["stream_dedup"](spark, SF_ORACLE).collect()
+
+    ckpt = scratch_dir(f"stream_ckpt_dedup_{os.path.basename(SF_ORACLE)}")
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    assert meta["conf"][_PARTITIONS] == cores
+    state = os.path.join(ckpt, "state", "0")
+    changelogs = [
+        f for part in os.listdir(state)
+        for f in os.listdir(os.path.join(state, part))
+        if f.endswith(".changelog")
+    ]
+    assert changelogs, "RocksDB committed no changelog files"
+
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert (
+        spark.conf.get(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+        )
+        == "true"
+    )
+    assert {k: spark.conf.get(k) for k in before} == before
+
+
+@pytest.mark.parametrize("fail_at", ["start", "batch"])
+def test_failed_stream_restores_session_conf(spark, fail_at):
+    """A stateful query that raises, at start() (no sink path) or inside a
+    micro-batch, still restores the session's shuffle-partition and
+    provider settings, so the scoped override never leaks into later batch
+    ops."""
+    from highspeedrailwaybigdatasystem_spark.streaming import streams
+
+    src = scratch_dir(f"conf_restore_src_{fail_at}")
+    ckpt = scratch_dir(f"conf_restore_ckpt_{fail_at}")
+    for d in (src, ckpt):
+        shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(src)
+    shutil.copy(f"{SF_ORACLE}/events.parquet", os.path.join(src, "a.parquet"))
+    counts = _read_events_stream(spark, src).groupBy("event_type").count()
+
+    def crash(batch_df, batch_id):
+        raise RuntimeError("injected batch failure")
+
+    if fail_at == "start":
+        writer = counts.writeStream.format("parquet").outputMode("complete")
+    else:
+        writer = counts.writeStream.foreachBatch(crash).outputMode("complete")
+    writer = writer.option("checkpointLocation", ckpt)
+
+    before = {k: spark.conf.get(k) for k in (_PARTITIONS, _PROVIDER)}
+    # both differ from the scoped values, else a leak would be unobservable
+    assert before[_PARTITIONS] != str(spark.sparkContext.defaultParallelism)
+    assert before[_PROVIDER] != streams._ROCKSDB
+    with pytest.raises(Exception) as exc:
+        streams._run_stream(spark, writer, rocksdb=True)
+    if fail_at == "batch":
+        assert "injected batch failure" in str(exc.value)
+    assert {k: spark.conf.get(k) for k in before} == before
+
+
+def test_heavy_sink_read_back_fails_loud(spark):
+    """The heavy harness reads its sink back with the stream's own schema:
+    a stream that committed no batch yields a typed empty frame, while a
+    corrupt sink raises instead of reading as an empty answer."""
+    from highspeedrailwaybigdatasystem_spark.streaming import streams
+
+    src = scratch_dir("readback_src")
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src)
+    dedup = _events_stream_over(spark, src).dropDuplicates(["event_id"])
+
+    empty = streams._run_heavy_state(spark, dedup, "readback")
+    assert empty.schema == dedup.schema
+    assert empty.count() == 0
+
+    shutil.copy(f"{SF_ORACLE}/events.parquet", os.path.join(src, "a.parquet"))
+    full = streams._run_heavy_state(spark, dedup, "readback")
+    n = spark.read.parquet(f"{SF_ORACLE}/events.parquet").count()
+    assert full.count() == n
+
+    out = scratch_dir("stream_out_readback")
+    ckpt = scratch_dir("stream_ckpt_readback")
+    data = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert data
+    for f in data:
+        with open(os.path.join(out, f), "wb") as fh:
+            fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        streams._read_sink(spark, out, ckpt, dedup.schema).count()
+    shutil.rmtree(out)  # committed batches, but the sink is gone
+    with pytest.raises(Exception):
+        streams._read_sink(spark, out, ckpt, dedup.schema).count()
