@@ -7,26 +7,19 @@ Prints ONE JSON line:
 Methodology (mirrors BASELINE.md): one reused warmed SparkSession for the
 whole set; per query, one untimed warmup pass then best-of-2 timed runs
 (timing = plan + execute + collect on a FRESH DataFrame per run,
-perf_counter — ops carrying registry.plan_memo are unwrapped via
-``__wrapped__`` so the timed runs include a full Catalyst pass and a full
-execution). `value` is the sum of per-query times — total wall-clock for
-the headline set, excluding session startup (amortized across the set,
-per SURVEY.md §4.3) — and is directly comparable to every r1–r11 artifact.
+perf_counter — every run calls the registered op, so it includes a full
+Catalyst pass and a full execution). `value` is the sum of per-query
+times — total wall-clock for the headline set, excluding session startup
+(amortized across the set, per SURVEY.md §4.3) — and is directly
+comparable to every r1–r11 artifact.
 
 Cache-honest timing (round 17, r16 verdict task #1): the timed fresh runs
 now run after an untimed ``spark.catalog.clearCache()`` so cache-bearing
 ops pay their internal cache build inside the fresh figure; the pre-r17
 regime (caches left warm between timed runs) ships alongside as
-``warm_cache`` so every r1–r16 artifact stays comparable.
-
-``steady_state`` is reported SEPARATELY: repeat-collect of the memoized
-DataFrame, the regime a dashboard tick / service endpoint runs in. Honesty
-note (round 12): re-collecting the same DataFrame lets AQE REUSE its
-already-materialized shuffle stages — on a 60 M-row corpus the repeat
-collect is ~30× the fresh one because the scan+partial-agg stages are
-served from shuffle files, not re-run. That is a real, load-bearing Spark
-capability for repeated identical queries on an unchanged corpus, but it
-is NOT engine execution speed, so it never contributes to `value`.
+``warm_cache`` so every r1–r16 artifact stays comparable. Re-collecting
+one held DataFrame (AQE reusing its materialized shuffle files) is a
+serving-tier regime, not engine speed, and is not measured here.
 
 Headline set: the six BASELINE.md shapes (q_scan_agg q_join3 q_window
 q_topk q_json q_session_ish) plus the LLM-pipeline differentiators
@@ -160,10 +153,10 @@ def time_query(fn, spark, runs: int = 2) -> tuple[float, float]:
     """Best-of-N FRESH-call timing: plan + execute + collect per run.
     Returns ``(fresh_sec, warm_cache_sec)``.
 
-    plan_memo-wrapped ops are unwrapped so every timed run constructs a new
-    DataFrame — a memoized DF would let AQE serve re-collects from its
-    already-materialized shuffle stages (~30× fast on big corpora), which
-    is steady-state serving, not engine speed (see module docstring).
+    Every run, warm-up included, calls ``fn`` and collects the new
+    DataFrame it returns — a held DataFrame would let AQE serve re-collects
+    from its already-materialized shuffle stages, which is serving-mode
+    reuse, not engine speed (see module docstring).
 
     Cache honesty (r16 verdict task #1): Spark's CacheManager matches
     structurally identical plans, so without intervention the timed fresh
@@ -175,41 +168,26 @@ def time_query(fn, spark, runs: int = 2) -> tuple[float, float]:
     place, the r1–r16 methodology) is still measured and reported
     separately as ``warm_cache_sec`` so the artifact stays comparable with
     every earlier round."""
-    fresh = getattr(fn, "__wrapped__", fn)
-    fresh(spark, SF_DIR).collect()  # warmup: plan + codegen + file listing
+    fn(spark, SF_DIR).collect()  # warmup: plan + codegen + file listing
     best = float("inf")
     for _ in range(runs):
         spark.catalog.clearCache()  # untimed: next run pays its own caches
         t0 = time.perf_counter()
-        fresh(spark, SF_DIR).collect()
+        fn(spark, SF_DIR).collect()
         best = min(best, time.perf_counter() - t0)
     # old-methodology figure: op-internal caches were built by the last
     # timed run above and are deliberately left in place here
     warm = float("inf")
     for _ in range(runs):
         t0 = time.perf_counter()
-        fresh(spark, SF_DIR).collect()
+        fn(spark, SF_DIR).collect()
         warm = min(warm, time.perf_counter() - t0)
     return best, warm
 
 
-def time_steady_state(fn, spark, runs: int = 2) -> float:
-    """Repeat-collect of the op's memoized/reused DataFrame: plan reuse +
-    AQE materialized-stage reuse. The service-loop number, reported
-    alongside (never as) the headline value."""
-    df = fn(spark, SF_DIR)
-    df.collect()
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df.collect()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def measure_once() -> tuple[dict, dict, dict, dict, dict]:
+def measure_once() -> tuple[dict, dict, dict, dict]:
     """One full measurement pass:
-    (timings, warm_cache, steady, parallelism, host_probe)."""
+    (timings, warm_cache, parallelism, host_probe)."""
     # Shuffle partitions sized to the DATA, not the core count: at sf0.1
     # every shuffle is <20 MB, so 16 partitions (measured best of 8/16/64)
     # keeps scan/window parallelism without per-task scheduling overhead.
@@ -235,19 +213,17 @@ def measure_once() -> tuple[dict, dict, dict, dict, dict]:
 
     timings: dict[str, float] = {}
     warm_cache: dict[str, float] = {}
-    steady: dict[str, float] = {}
     for bench_name, qname in HEADLINE.items():
         fresh_sec, warm_sec = time_query(qs[qname], spark)
         timings[bench_name] = round(fresh_sec, 4)
         warm_cache[bench_name] = round(warm_sec, 4)
-        steady[bench_name] = round(time_steady_state(qs[qname], spark), 4)
 
     # probe AFTER spark.stop(): with the post-workload JVM still alive the
     # control read 4.8-13.7 s on an idle host (GC/cleaner threads contend
     # with it even from a subprocess); after stop it reads ~3.1-3.3 s,
     # within noise of the 3.05 s idle signature.
     spark.stop()
-    return timings, warm_cache, steady, parallelism, host_probe()
+    return timings, warm_cache, parallelism, host_probe()
 
 
 def main() -> None:
@@ -258,8 +234,8 @@ def main() -> None:
     attempts = []
     max_attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", MAX_ATTEMPTS))
     for i in range(max_attempts):
-        timings, warm_cache, steady, parallelism, probe = measure_once()
-        attempts.append((timings, warm_cache, steady, parallelism, probe))
+        timings, warm_cache, parallelism, probe = measure_once()
+        attempts.append((timings, warm_cache, parallelism, probe))
         if not contended(probe):
             break
         if i < max_attempts - 1:
@@ -276,8 +252,8 @@ def main() -> None:
     # a min over ALL attempts could ship a flagged-but-fast run over a clean
     # retry — the anti-honest direction. is_contended is True iff no clean
     # attempt landed, which makes the artifact comment literally true.
-    clean = [a for a in attempts if not contended(a[4])]
-    timings, warm_cache, steady, parallelism, probe = min(
+    clean = [a for a in attempts if not contended(a[3])]
+    timings, warm_cache, parallelism, probe = min(
         clean or attempts, key=lambda a: sum(a[0].values())
     )
     is_contended = not clean
@@ -318,13 +294,6 @@ def main() -> None:
                 # effective parallelism (r16 verdict task #2): makes the
                 # $SPARK_GRAFT_CPUS contract observable from the artifact
                 "parallelism": parallelism,
-                "steady_state": {
-                    "total": round(sum(steady.values()), 4),
-                    "queries": steady,
-                    "note": "repeat-collect of the reused plan; AQE serves "
-                    "materialized shuffle stages — serving mode, not "
-                    "engine speed",
-                },
                 "sf": sf_val,
                 "host_probe": probe,
                 # contention verdict (r13 task #2): True means every

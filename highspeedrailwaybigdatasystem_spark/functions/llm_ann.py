@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ..operators._util import _materialize_cache, ratio, sql_q, t
 from ._llm_shared import _DOT_ORACLE
 
@@ -197,7 +197,6 @@ def _emb_f64(col, n_rows: int):
     LIMIT 10
     """,
 )
-@plan_memo
 def llm_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 neighbors of probe vec_id=0: broadcast the probe,
     one pass over the corpus, TakeOrderedAndProject merge. The 100 TB path

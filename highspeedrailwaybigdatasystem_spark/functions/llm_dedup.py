@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ..operators._util import _materialize_cache, ratio, sql_q, t
 from ._llm_shared import _DOT_ORACLE
 from .llm_ann import llm_embed_near_dup
@@ -38,7 +38,6 @@ from .llm_ann import llm_embed_near_dup
     FROM hashed GROUP BY text_hash
     """,
 )
-@plan_memo
 def llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on a normalized content hash, deterministic keep-lowest-id
     rule. The corpus has no duplicate texts, so the input is doubled via
@@ -237,7 +236,6 @@ def llm_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(i.shared AS DOUBLE) / (za.n + zb.n - i.shared) >= 0.2
     """,
 )
-@plan_memo
 def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH banding built from pure DataFrame ops (the 100 TB
     near-dedup path, deterministic and exactly oracle-checkable):
@@ -269,12 +267,9 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
     this pipeline spent ~0.85 s PER CALL in driver-side DataFrame
     construction alone (hundreds of JVM round-trips for 20×6 arithmetic
     Columns), which dominated the sf0.1 wall-clock. The physical plan is
-    identical. The WHOLE constructed plan is additionally memoized via the
-    shared ``@plan_memo`` (registry.py): re-parsing two SQL texts, three
-    cache probes and a fresh Catalyst planning pass cost ~0.5 s of pure
-    driver time per warm call; the memoized plan leaves ~46 ms of real
-    execution. Composers (lsh_tuning_curve, dup_partner_degree_dist, ...)
-    call this function directly and inherit the memo."""
+    identical. Composers (lsh_tuning_curve, dup_partner_degree_dist, ...)
+    call this function directly, so each of their calls rebuilds and
+    re-materializes both caches."""
     from ..schemas import ensure_views
 
     ensure_views(spark, sf_dir)
@@ -400,10 +395,6 @@ def llm_minhash_banding(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE cast(shared AS double) / (na + nb - shared) >= 0.2
         """
     )
-    # declare the internal caches for plan_memo's hit-path re-materialization
-    # (registry.py): a composer consuming the memoized frame after a
-    # clearCache must not plan against empty InMemoryRelations
-    out._graft_cached_deps = (shingle, cand)
     return out
 
 

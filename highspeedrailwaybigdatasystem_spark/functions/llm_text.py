@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ..operators._util import _materialize_cache, ratio, sql_q, t
 
 
@@ -37,7 +37,6 @@ from ..operators._util import _materialize_cache, ratio, sql_q, t
     FROM docs d JOIN per_lang p ON d.lang = p.lang
     """,
 )
-@plan_memo
 def llm_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus statistics: doc count, avg chars, token counts,
     type-token ratio. Bench headline op — one SQL text (see ``sql_q``),

@@ -126,11 +126,13 @@ def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
     planner-statistics note — unmaterialized cached explodes carry
     pre-explode size estimates, under which Catalyst force-broadcasts the
     whole view: a 3.5 GiB OOM at the 100x corpus). Gating on the actual
-    CacheManager state (not a process-global seen-set, round 11) keeps the
-    guard correct across spark.catalog.clearCache()/unpersist(): a cleared
-    entry re-registers unmaterialized and gets re-counted here. Falls back
-    to an unconditional count() if the JVM probe is unavailable."""
-    for df in dfs:
+    CacheManager state (not a process-global seen-set) skips the count
+    when the buffers are already loaded. Every frame must have been
+    ``.cache()``d by the caller: a frame with no CacheManager entry raises
+    ``ValueError``, because counting it would be a full uncached recompute
+    that downstream queries then inline per reference. Falls back to an
+    unconditional count() if the JVM probe is unavailable."""
+    for i, df in enumerate(dfs):
         registered = True
         try:
             opt = (
@@ -148,14 +150,11 @@ def _materialize_cache(spark: SparkSession, *dfs: DataFrame) -> None:
         except Exception:
             loaded = False
         if not registered:
-            # r17: spark.catalog.clearCache()/unpersist() removes the
-            # CacheManager ENTRY, not just the buffers — a bare count()
-            # would then be a full uncached recompute and downstream
-            # queries would still inline the whole subtree per reference.
-            # Re-register first so the count below rebuilds a real cache
-            # (plan_memo's hit path relies on this after the cache-honest
-            # harnesses clear between timed runs).
-            df.cache()
+            plan = df._jdf.queryExecution().analyzed().toString()
+            raise ValueError(
+                f"_materialize_cache: frame {i} is not cached; call .cache() "
+                f"on it before materializing. Its plan:\n{plan[:800]}"
+            )
         if not loaded:
             df.count()
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ._util import exact_group_percentiles, money, ratio, sql_q, t
 
 
@@ -33,7 +33,6 @@ from ._util import exact_group_percentiles, money, ratio, sql_q, t
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-@plan_memo
 def agg_scan_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: filtered scan + multi-aggregate group-by.
 

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ._util import EVENTS_TS_US, _materialize_cache, money, sql_q, t
 
 
@@ -48,7 +48,6 @@ from ._util import EVENTS_TS_US, _materialize_cache, money, sql_q, t
     GROUP BY n_name
     """,
 )
-@plan_memo
 def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue by nation for one region and one order year.
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ._util import money, ratio, sql_q, t
 
 
@@ -263,7 +263,6 @@ def arr_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
 )
-@plan_memo
 def json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-in-string extraction (props = '{"k": <int>}') + aggregation.
     Bench headline op — one SQL text (see ``sql_q``).

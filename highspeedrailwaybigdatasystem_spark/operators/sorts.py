@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ._util import money, sql_q, t
 
 
@@ -46,7 +46,6 @@ def sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
 )
-@plan_memo
 def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 customers by spend. Ordering on the ROUNDED sum + key suffix so
     the cut can't flip on float summation order across engines. Bench

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ._util import EVENTS_TS_US, money, ratio, sql_q, t
 
 
@@ -237,7 +237,6 @@ def ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n_events DESC, user_id, hour_start LIMIT 20
     """,
 )
-@plan_memo
 def ts_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user hourly activity rollup, top 20 busiest (user, hour) cells —
     the BASELINE.md q_session_ish shape, now a first-class op so the bench

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..registry import plan_memo, register
+from ..registry import register
 from ._util import EVENTS_TS_US, money, ratio, sql_q, t
 
 
@@ -29,7 +29,6 @@ from ._util import EVENTS_TS_US, money, ratio, sql_q, t
     WHERE rn <= 3
     """,
 )
-@plan_memo
 def win_rownum_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer by price (canonical per-group top-k).
     Bench headline op — one SQL text (see ``sql_q``); same single

@@ -140,10 +140,12 @@ _EVENTS_TS_KIND: dict[tuple[str, int, int], str] = {}
 
 def _events_fingerprint(path: str) -> tuple[str, int, int]:
     """Corpus fingerprint (max mtime_ns, total bytes) over every parquet
-    data file under ``path`` — recursive, so a Spark-written directory
-    dataset (table.parquet/part-*.parquet) is covered by its part files,
-    not just the directory entry: an in-place part rewrite changes the
-    fingerprint and invalidates any memo keyed on it."""
+    data file under ``path`` — one table file, or a whole sf_dir. The walk
+    is recursive, so a Spark-written directory dataset
+    (table.parquet/part-*.parquet) is covered by its part files, not just
+    the directory entry: an in-place rewrite of any table or part changes
+    the fingerprint and invalidates the ts-kind cache and the
+    ``ensure_views`` registration keyed on it."""
     import glob
     import os
 
@@ -271,11 +273,11 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-#: (session JVM id) → (sf_dir, events fingerprint) currently registered by
+#: (session JVM id) → fingerprint of the sf_dir currently registered by
 #: ensure_views. Keyed on the underlying Java session object id so a stopped
 #: and rebuilt SparkSession (fresh catalog, same Python id reuse possible)
 #: never reads a stale entry.
-_VIEWS_REGISTERED: dict[int, tuple[str, tuple[str, int, int]]] = {}
+_VIEWS_REGISTERED: dict[int, tuple[str, int, int]] = {}
 
 
 def ensure_views(spark: SparkSession, sf_dir: str) -> None:
@@ -284,15 +286,17 @@ def ensure_views(spark: SparkSession, sf_dir: str) -> None:
     A ``spark.read.schema(...).parquet(...)`` round-trip costs 25–55 ms of
     driver time per table; ops that re-register all ten views on every call
     were paying ~0.5 s of pure Py4J overhead. One registration per
-    (session, sf_dir) amortizes that to zero on warm paths. The key
-    includes the events-corpus fingerprint (path, mtime, size) so an
-    in-place corpus regeneration invalidates the memo and re-registers
-    (and re-sniffs) instead of serving stale views. Re-registers when the
-    same session switches sf_dir (plain view names hold one corpus at a
-    time — exactly the driver/mirror/pytest usage).
+    (session, corpus state) amortizes that to zero on warm paths. The key
+    is the fingerprint of the whole sf_dir (path, newest mtime, total size
+    over every parquet file under it), so an in-place rewrite of ANY table
+    re-registers (and re-sniffs) instead of serving a stale view: one
+    created before ``lineitem.parquet`` was overwritten with a larger
+    copy counted 0 rows where a fresh read counts 60000. Re-registers when
+    the same session switches sf_dir (plain view names hold one corpus at
+    a time — exactly the __spark_entry__/mirror/pytest usage).
     """
     key = id(spark._jsparkSession)
-    state = (sf_dir, _events_fingerprint(f"{sf_dir}/events.parquet"))
+    state = _events_fingerprint(sf_dir)
     if _VIEWS_REGISTERED.get(key) != state:
         register_views(spark, sf_dir)
         _VIEWS_REGISTERED[key] = state

@@ -4,10 +4,9 @@ Two properties made BENCH artifacts trustworthy in r12 and must never
 silently regress:
 
 1. The headline ``value`` is measured on FRESH plan constructions —
-   ``time_query`` unwraps ``plan_memo`` (``__wrapped__``) so a memoized
-   DataFrame can never let AQE serve already-materialized shuffle stages
-   into the headline number (that regime is real, but it is serving-mode
-   reuse and is reported separately as ``steady_state``).
+   ``time_query`` calls the registered op for every run and collects the
+   DataFrame that call returned, so AQE can never serve an earlier run's
+   already-materialized shuffle stages into the headline number.
 2. The artifact always carries BOTH comparison ratios —
    ``vs_recorded_baseline`` (gate math vs the recorded r1 baseline) and
    ``vs_steady_state`` (quiet-host steady state) — plus the
@@ -38,62 +37,21 @@ def _load_bench():
     return mod
 
 
-def test_time_query_unwraps_plan_memo(spark):
-    """time_query must call the UNWRAPPED callable: every timed run sees a
-    fresh DataFrame construction, never the memoized instance."""
+def test_time_query_builds_fresh_frame_every_run(spark):
+    """time_query must call the op once per run and collect the DataFrame
+    that call returned — never re-collect a held one, which would let AQE
+    serve its already-materialized shuffle stages into the headline number."""
     bench = _load_bench()
-    calls = {"fresh": 0, "wrapper": 0}
+    calls = 0
 
-    def fresh_fn(s, sf_dir):
-        calls["fresh"] += 1
+    def op(s, sf_dir):
+        nonlocal calls
+        calls += 1
         return s.range(10)
 
-    import functools
-
-    @functools.wraps(fresh_fn)
-    def wrapper(s, sf_dir):
-        calls["wrapper"] += 1
-        return fresh_fn(s, sf_dir)
-
-    # mimic plan_memo's contract: the wrapper exposes __wrapped__
-    bench.time_query(wrapper, spark, runs=2)
-    assert calls["wrapper"] == 0, (
-        "time_query called the memo wrapper — headline value would "
-        "include serving-mode reuse"
-    )
-    # warmup + 2 cache-honest timed runs + 2 warm-cache-regime runs (r17)
-    assert calls["fresh"] == 5
-
-
-def test_registered_memo_ops_expose_wrapped():
-    """Every plan_memo-wrapped registered op must expose __wrapped__ —
-    the hook time_query relies on. A memoized op without it would be
-    silently timed in serving mode.
-
-    Detection is STRUCTURAL (r13 ADVICE): plan_memo stamps its wrapper
-    with ``__plan_memo__ = True``; the old ``__module__ == registry``
-    heuristic never fired because functools.wraps copies __module__ from
-    the wrapped op. The test also asserts the marker actually exists in
-    the registry's headline set — if a refactor dropped the stamp, the
-    loop would silently assert nothing again."""
-    from highspeedrailwaybigdatasystem_spark import registry
-
-    qs = registry.all_queries()
-    bench = _load_bench()
-    memoized = [
-        qname for qname in bench.HEADLINE.values()
-        if getattr(qs[qname], "__plan_memo__", False)
-    ]
-    assert memoized, (
-        "no headline op carries __plan_memo__ — either plan_memo lost its "
-        "marker stamp or the headline set lost all memoized ops; both make "
-        "this guard vacuous"
-    )
-    for qname in memoized:
-        assert hasattr(qs[qname], "__wrapped__"), (
-            f"{qname}: plan_memo-marked op without __wrapped__ — "
-            "time_query would time it in serving mode"
-        )
+    bench.time_query(op, spark, runs=2)
+    # warmup + 2 cache-honest timed runs + 2 warm-cache-regime runs
+    assert calls == 5
 
 
 def test_contention_guard_verdict():
@@ -135,7 +93,7 @@ def test_per_query_baseline_pins():
 
 def test_bench_artifact_carries_both_ratios():
     """bench.py's JSON line must always carry vs_recorded_baseline,
-    vs_steady_state, steady_state, and the DuckDB control — run as a
+    vs_steady_state, warm_cache, and the DuckDB control — run as a
     SUBPROCESS against sf0.001 so this stays a smoke and bench's
     spark.stop() cannot kill the suite's shared session (the vs_* fields
     are None off the graded sf0.1 set, but the KEYS must exist)."""
@@ -162,7 +120,7 @@ def test_bench_artifact_carries_both_ratios():
     for key in (
         "value",
         "queries",
-        "steady_state",
+        "warm_cache",
         "host_probe",
         "bench_vs_control",
         "vs_recorded_baseline",
@@ -173,7 +131,7 @@ def test_bench_artifact_carries_both_ratios():
     ):
         assert key in art, f"BENCH artifact missing {key}"
     assert art["host_probe"]["duckdb_control_sec"] > 0
-    assert "note" in art["steady_state"]
+    assert "note" in art["warm_cache"]
     assert isinstance(art["contended"], bool)
     assert art["attempts"] >= 1
     # off the graded sf0.1 set the per-query ratio table is None by design

@@ -47,7 +47,6 @@ _CONF = "spark.graft.geo_topk.force_cell_deg"
 
 def _run_tier(spark, sf_dir: str, tier: str) -> pd.DataFrame:
     fn = all_queries()["geo_grid_topk"]
-    fn = getattr(fn, "__wrapped__", fn)  # bypass any plan memo: conf matters
     spark.conf.set(_CONF, tier)
     try:
         out = fn(spark, sf_dir).toPandas()
@@ -109,7 +108,6 @@ def test_derived_coverage_bound_matches_band():
 
 def test_invalid_forced_tier_rejected(spark):
     fn = all_queries()["geo_grid_topk"]
-    fn = getattr(fn, "__wrapped__", fn)
     spark.conf.set(_CONF, "0.3")
     try:
         with pytest.raises(ValueError, match="force_cell_deg"):

@@ -794,9 +794,7 @@ def test_nondeterminism_pin_single_evaluation(spark, op, expr, n):
     physical plan — the single-evaluation property the r16 optimizations
     measured (e.g. fuzzy levenshtein 4.03 s -> 1.97 s came entirely from
     removing the re-inlined second DP)."""
-    fn = _QUERIES[op]
-    fresh = getattr(fn, "__wrapped__", fn)
-    s = formatted(fresh(spark, SF_ORACLE))
+    s = formatted(_QUERIES[op](spark, SF_ORACLE))
     assert _count_expr(s, expr) == n, (
         f"{op}: expected exactly {n} x {expr!r} in the plan, "
         f"got {_count_expr(s, expr)}"

@@ -29,9 +29,8 @@ def _synthetic_sf(documents: pd.DataFrame | None = None,
                   events: pd.DataFrame | None = None) -> str:
     """A fresh sf_dir: synthetic tables written as parquet, every other
     corpus table symlinked from sf0.001 so register_views sees all ten.
-    A new directory per example — ensure_views keys the memo on
-    (sf_dir, events fingerprint), so reusing a path would serve stale
-    views when only documents changed."""
+    ensure_views keys its registration on a fingerprint of every parquet
+    file under the directory, so a table rewritten in place is re-read too."""
     d = tempfile.mkdtemp(prefix="prop_sf_")
     overrides = {}
     if documents is not None:

@@ -34,6 +34,17 @@ def test_survey_inventory_totals_match_registry():
     assert rows_only == len(qs) - len(os_)
 
 
+def test_no_registered_op_carries_a_wrapper():
+    """Every registered op is its own function: ``__spark_entry__``,
+    bench.py, perfbench, the tools and the composers that call an op
+    directly all run the same callable, with no decorator layer (and no
+    ``__wrapped__`` escape hatch) in between."""
+    qs = registry.all_queries()
+    assert len(qs) == len(registry._QUERIES)
+    wrapped = sorted(n for n, fn in qs.items() if hasattr(fn, "__wrapped__"))
+    assert not wrapped, f"ops behind a wrapper: {wrapped}"
+
+
 def test_operators_md_header_matches_registry():
     with open(os.path.join(REPO, "OPERATORS.md")) as f:
         head = f.read(2000)

@@ -79,9 +79,8 @@ def main() -> None:
     for n in (1000, 2000, 4000):
         sf_dir = build_corpus(n)
         for op in ("llm_chunk_overlap_dedup", "llm_chunk_overlap_dedup_capped"):
-            fn = getattr(qs[op], "__wrapped__", qs[op])
             t0 = time.time()
-            cnt = fn(spark, sf_dir).count()
+            cnt = qs[op](spark, sf_dir).count()
             dt = time.time() - t0
             rows_by[(n, op)] = cnt
             print(f"{n:>10} {op:<34} {cnt:>10} {dt:>8.2f}")

@@ -396,7 +396,6 @@ def measure(demo_fn=None, only: list[str] | None = None) -> int:
     for name, fn in sorted(qs.items()):
         if name.startswith("stream_"):
             continue
-        fn = getattr(fn, "__wrapped__", fn)
         per_sf: dict[str, list[int]] = {}
         for sf in (SF_SMALL, SF_LARGE):
             try:

@@ -51,9 +51,7 @@ def main() -> None:
         todo = [(n, HEADLINE[n]) for n in args.names]
 
     for out_name, qname in todo:
-        fn = qs[qname]
-        fresh = getattr(fn, "__wrapped__", fn)
-        df = fresh(spark, SF_DIR)
+        df = qs[qname](spark, SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

@@ -46,7 +46,6 @@ def main() -> None:
     with open(OUT, "a") as fh:
         for i, name in enumerate(names):
             fn = qs[name]
-            fresh = getattr(fn, "__wrapped__", fn)
             spark.sparkContext.setJobDescription(f"sweep:{name}")
             def _drive(df):
                 df.write.format("noop").mode("overwrite").save()
@@ -59,18 +58,18 @@ def main() -> None:
                 # timed runs from warmup-populated InMemoryRelations).
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
-                _drive(fresh(spark, SF_DIR))  # warmup (plan+codegen+listing)
+                _drive(fn(spark, SF_DIR))  # warmup (plan+codegen+listing)
                 warm = time.perf_counter() - t0
                 best = float("inf")
                 for _ in range(2):
                     spark.catalog.clearCache()
                     t0 = time.perf_counter()
-                    _drive(fresh(spark, SF_DIR))
+                    _drive(fn(spark, SF_DIR))
                     best = min(best, time.perf_counter() - t0)
                 # old-regime figure (caches warm from the last timed run)
                 # kept for cross-round comparability with pre-r17 sweeps
                 t0 = time.perf_counter()
-                _drive(fresh(spark, SF_DIR))
+                _drive(fn(spark, SF_DIR))
                 wc = time.perf_counter() - t0
                 rec = {
                     "op": name,
